@@ -74,9 +74,15 @@ def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: full KG construction + faceted_data pivot at sf0.001."""
-    from ferenda_spark.pipeline import flagship
-    return flagship(spark, "/root/testdata/sf0.001")
+    """Flagship: the full KG-construction DAG at sf0.001, then the
+    faceted_data pivot over its pre-canonical triples (the corpus plants
+    sameAs between document URIs; the canonical rewrite would merge
+    their facet rows)."""
+    from ferenda_spark.corpus import load_pages
+    from ferenda_spark.operators.facets import faceted_data
+    from ferenda_spark.pipeline import kg_dag
+    kg = kg_dag(spark, load_pages(spark, "/root/testdata/sf0.001"))
+    return faceted_data(kg.triples)
 
 
 # ----------------------------------------------------------- KG queries
@@ -1602,9 +1608,9 @@ def _q_canonical_triples(spark, sf_dir):
     through the owl:sameAs connected-components mapping and the
     now-degenerate sameAs self-loops dropped — the final materialized
     triples table of the north-rule pipeline."""
-    from ferenda_spark.pipeline import canonical_triples
-    return canonical_triples(spark, _docs(spark, sf_dir),
-                             mapping=_canonical_mapping(spark, sf_dir))
+    from ferenda_spark.operators.canonicalize import rewrite_canonical
+    return rewrite_canonical(_triples(spark, sf_dir),
+                             _canonical_mapping(spark, sf_dir))
 
 
 def _q_legal_mentions(spark, sf_dir):

@@ -20,6 +20,8 @@ north rule names:
 Rounds needed = graph diameter; the corpus plants chains of length 4
 (doc_id % 4 links to doc_id-1) so convergence takes 3 rounds — the
 driver-side loop is O(diameter), each round 2 shuffles (join + groupBy).
+A graph that has not converged within ``max_iter`` rounds raises
+instead of returning split components.
 """
 
 from __future__ import annotations
@@ -72,6 +74,9 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
+    else:
+        raise RuntimeError("connected_components: no fixpoint after %d "
+                           "rounds" % max_iter)
     return labels
 
 

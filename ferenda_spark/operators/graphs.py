@@ -47,6 +47,9 @@ def ispartof_closure(triples: DataFrame, max_iter: int = 8) -> DataFrame:
         if cur == prev:
             break
         prev = cur
+    else:
+        raise RuntimeError("ispartof_closure: no fixpoint after %d "
+                           "rounds" % max_iter)
     return closure
 
 

@@ -771,6 +771,9 @@ def mp4_meta_bytes(b: bytes) -> dict | None:
             if sz < 8 or i + sz > hi:
                 return
             c = i + 8
+            if c >= i + sz:      # header-only box: no payload to read
+                i += sz
+                continue
             if typ in (b"moov", b"trak", b"mdia") and depth < 4:
                 walk(c, i + sz, depth + 1)
             elif typ == b"mvhd" and timescale is None:

@@ -1,16 +1,26 @@
 """End-to-end DAG assembly: pages -> parsed docs -> triples ->
-canonicalized triples -> derived tables (SURVEY.md §3.1 restated)."""
+canonicalized triples (SURVEY.md §3.1 restated).
+
+:func:`kg_dag` is the one definition of the KG-construction job;
+``entry()``, ``bench.py``, ``scripts/submit_flagship.py`` and the tests
+all run it.  :func:`parsed_docs` and :func:`corpus_triples` are the
+query-side helpers the registered queries share."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from typing import NamedTuple
 
-from .corpus import load_pages, pages_from_documents
+from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from . import catalog
+from .corpus import load_pages
 from .operators.canonicalize import rewrite_canonical, sameas_components
 from .operators.extract import extract_pages
-from .operators.facets import faceted_data
+from .operators.incremental import fingerprinted, run_stage_atomic
 from .operators.linking import build_resources, entity_mention_triples
-from .operators.triples import all_triples, with_doc_metadata
+from .operators.triples import TRIPLE_COLS, all_triples, with_doc_metadata
+
+KEYS = ["url", "input_fingerprint"]
 
 
 def parsed_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -24,109 +34,73 @@ def corpus_triples(spark: SparkSession, docs: DataFrame) -> DataFrame:
         entity_mention_triples(docs, resources))
 
 
-def canonical_triples(spark: SparkSession, docs: DataFrame,
-                      mapping: DataFrame | None = None) -> DataFrame:
-    """Full KG rewritten through the sameAs canonical mapping.
-
-    ``mapping`` is the materialized canonicalization stage table when
-    the caller has one (production shape: connected components runs
-    once per ingest and is persisted; every downstream query joins
-    against the stored mapping instead of re-running the fixpoint).
-    Without it the mapping is derived inline from the same triples."""
-    t = corpus_triples(spark, docs)
-    if mapping is None:
-        mapping = sameas_components(t)
-    return rewrite_canonical(t, mapping)
+class KG(NamedTuple):
+    """The stage frames of one :func:`kg_dag` run."""
+    parsed: DataFrame     # extract_pages output, quarantined rows included
+    triples: DataFrame    # doc/section/mention + entity-link triples
+    mapping: DataFrame    # owl:sameAs (uri, canonical_uri)
+    canonical: DataFrame  # triples rewritten through the mapping
 
 
-def staged_flagship(spark: SparkSession, sf_dir: str,
-                    store_dir: str) -> DataFrame:
-    """The flagship DAG as a CHAIN of resumable checkpointed stages
-    (north rule: every stage checkpoints with lineage so the run
-    resumes mid-DAG): pages -[parse]-> parsed docs -[triples]->
-    doc/section/mention triples.
-
-    * each stage is a :func:`operators.incremental.run_stage` call
-      with its OWN input fingerprint (md5(html) for parse, md5(text)
-      for triples), so a change anywhere reprocesses exactly the
-      affected documents in exactly the affected stages;
-    * a kill between stages costs only the unfinished stage — the
-      finished stage's entries anti-join selects zero rows on rerun
-      (pinned by test_staged_flagship_resumes_between_stages);
-    * triple rows keep (url, input_fingerprint) columns: per-row
-      lineage back to the exact page bytes that produced them (the
-      counters view is operators.incremental.stage_counters)."""
-    from pyspark.sql import functions as F
-
-    from .corpus import partition_by_url_prefix
-    from .operators.incremental import run_stage
-    from .operators.triples import all_triples
-
-    # north-rule layout: range-partition the crawl on a url prefix so
-    # hot domains are SPLIT across a bounded partition run (sampled
-    # range boundaries) instead of hashed into one partition
-    pages = partition_by_url_prefix(load_pages(spark, sf_dir))
-
-    def parse_t(todo):
-        return (extract_pages(todo)
-                .join(todo.select("url", "input_fingerprint"), "url"))
-
-    parsed = run_stage(pages, store_dir, "parse", parse_t)
-
-    def triples_t(todo):
-        t = all_triples(with_doc_metadata(todo))
-        lineage = todo.select(F.col("url"), "input_fingerprint")
-        return t.join(lineage, t["context"] == lineage["url"])
-
-    return run_stage(parsed.drop("input_fingerprint"), store_dir,
-                     "triples", triples_t, source_col="text")
+def _ok(parsed: DataFrame) -> DataFrame:
+    return parsed.where(F.col("error").isNull())
 
 
-def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The headline analytic: full KG construction then the faceted
-    pivot (documents per publisher/year — ferenda's faceted_data).
-
-    The parse stage is materialized once before the triples fan-out
-    (doc/section/mention/entity branches would otherwise each re-run
-    the Python parse); the cluster analogue is each stage writing to
-    and reading back an Iceberg table."""
-    docs = parsed_docs(spark, sf_dir).localCheckpoint()
-    triples = corpus_triples(spark, docs)
-    return faceted_data(triples)
+def _parse(todo: DataFrame) -> DataFrame:
+    return extract_pages(todo).join(todo.select(*KEYS), "url")
 
 
-def staged_flagship_atomic(spark: SparkSession, sf_dir: str,
-                           store_dir: str):
-    """:func:`staged_flagship` with every stage checkpoint upgraded to
-    the single-commit snapshot protocol (north rule: "every stage
-    checkpoints ... so the DAG is resumable mid-run", through real
-    atomic commits): a kill anywhere loses at most the uncommitted
-    stage batch, reruns reprocess exactly the pending inputs of
-    exactly the affected stages, and each stage table carries
-    time-travelable per-batch history (snaptable.history()).
+def _triples(todo: DataFrame) -> DataFrame:
+    # every triple's context is its page url: the per-row lineage back
+    # to the exact input that produced it
+    t = corpus_triples(todo.sparkSession, with_doc_metadata(todo))
+    lineage = todo.select(*KEYS)
+    return t.join(lineage, t["context"] == lineage["url"])
 
-    Returns ``(triples_df, parse_table, triples_table)``."""
-    from pyspark.sql import functions as F
 
-    from .operators.extract import extract_pages
-    from .operators.incremental import run_stage_atomic
-    from .operators.triples import all_triples, with_doc_metadata
+def _current(stage: DataFrame, inputs: DataFrame,
+             source_col: str) -> DataFrame:
+    """Rows of a snapshot stage table that belong to the current inputs
+    (the table also keeps the rows of pages since re-crawled)."""
+    return stage.join(fingerprinted(inputs, source_col).select(*KEYS),
+                      KEYS, "left_semi")
 
-    pages = load_pages(spark, sf_dir)
 
-    def parse_t(todo):
-        return (extract_pages(todo)
-                .join(todo.select("url", "input_fingerprint"), "url"))
+def kg_dag(spark: SparkSession, pages: DataFrame,
+           store: str | None = None) -> KG:
+    """The KG-construction job: pages -> parse -> doc/section/mention
+    and entity-link triples -> sameAs connected components ->
+    canonical triples.
 
-    parsed, ptab, _ = run_stage_atomic(pages, store_dir, "parse",
-                                       parse_t)
+    Without ``store`` every stage is cut with ``localCheckpoint``, so
+    the fan-out after parse never re-runs the Python parse.
 
-    def triples_t(todo):
-        t = all_triples(with_doc_metadata(todo))
-        lineage = todo.select(F.col("url"), "input_fingerprint")
-        return t.join(lineage, t["context"] == lineage["url"])
-
-    out, ttab, _ = run_stage_atomic(parsed.drop("input_fingerprint"),
-                                    store_dir, "triples", triples_t,
-                                    source_col="text")
-    return out, ptab, ttab
+    With ``store`` the parse and triples stages are resumable snapshot
+    stages (:func:`operators.incremental.run_stage_atomic`, keyed on
+    md5(html) and md5(text)): a rerun processes only pages whose input
+    changed, and a kill loses at most the uncommitted stage.  Each
+    stage's output is semi-joined back to the current inputs, so rows
+    of re-crawled pages never reach canonicalization.  The mapping and
+    the canonical triples are committed to the store's ``mapping`` and
+    ``triples`` tables and returned as read back."""
+    if store is None:
+        parsed = extract_pages(pages).localCheckpoint()
+        triples = corpus_triples(
+            spark, with_doc_metadata(_ok(parsed))).localCheckpoint()
+    else:
+        parsed_all, _, _ = run_stage_atomic(pages, store, "parse", _parse)
+        parsed = (_current(parsed_all, pages, "html")
+                  .drop("input_fingerprint").localCheckpoint())
+        ok = _ok(parsed)
+        tri_all, _, _ = run_stage_atomic(ok, store, "triples", _triples,
+                                         source_col="text")
+        triples = _current(tri_all, ok, "text").select(*TRIPLE_COLS)
+    mapping = sameas_components(triples).localCheckpoint()
+    canonical = rewrite_canonical(triples, mapping)
+    if store is None:
+        return KG(parsed, triples, mapping, canonical.localCheckpoint())
+    catalog.write_stage(mapping, store, "mapping")
+    catalog.write_triples(canonical, store)
+    return KG(parsed, triples, catalog.read_stage(spark, store, "mapping"),
+              catalog.read_stage(spark, store, "triples")
+              .select(*TRIPLE_COLS))

@@ -8,12 +8,16 @@ between layers."""
 import os
 import shutil
 import tempfile
+from collections import Counter
 
 import pytest
 
 from pyspark.sql import functions as F
 
 from ferenda_spark.session import get_spark
+
+
+SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
@@ -33,34 +37,22 @@ def tmpdir():
 def test_full_dag_end_to_end(spark, tmpdir):
     from ferenda_spark.catalog import dump_nt
     from ferenda_spark.corpus import load_pages
-    from ferenda_spark.operators.extract import extract_pages
-    from ferenda_spark.operators.incremental import run_stage_atomic
-    from ferenda_spark.operators.triples import (all_triples,
-                                                 with_doc_metadata)
-    from ferenda_spark.pipeline import canonical_triples
+    from ferenda_spark.pipeline import kg_dag
     from ferenda_spark.snaptable import SnapshotTable
     from ferenda_spark.sparql import (sparql_select,
                                       sparql_update_table)
 
-    sf = "/root/testdata/sf0.001"
-    pages = load_pages(spark, sf)
+    pages = load_pages(spark, SF).localCheckpoint()
     n_pages = pages.count()
 
-    # 1. parse through the atomic snapshot stage (resumable ingest)
-    def parse_t(todo):
-        return (extract_pages(todo)
-                .join(todo.select("url", "input_fingerprint"), "url"))
-
-    parsed, ptab, s1 = run_stage_atomic(pages, tmpdir, "parse",
-                                        parse_t)
-    assert s1["summary"]["added_rows"] == n_pages
-    # rerun = no rework, no new snapshot
-    _, _, s_again = run_stage_atomic(pages, tmpdir, "parse", parse_t)
-    assert s_again is None
-
-    # 2. KG construction + canonicalization from the staged table
-    docs = with_doc_metadata(parsed.drop("input_fingerprint"))
-    triples = canonical_triples(spark, docs.localCheckpoint())
+    # 1. KG construction + canonicalization through the atomic snapshot
+    # stages (resumable ingest)
+    kg_dag(spark, pages, store=tmpdir)
+    ptab = SnapshotTable(os.path.join(tmpdir, "parse_snap"))
+    assert ptab.history()[0]["added_rows"] == n_pages
+    # 2. rerun = no rework, no new snapshot
+    triples = kg_dag(spark, pages, store=tmpdir).canonical
+    assert len(ptab.history()) == 1
 
     # 3. materialize as a snapshot table
     tab = SnapshotTable(os.path.join(tmpdir, "kg"))
@@ -105,19 +97,40 @@ def test_full_dag_end_to_end(spark, tmpdir):
     assert dumped == expect
 
 
-def test_staged_flagship_atomic_resume(spark, tmpdir):
-    """Re-running the snapshot-staged flagship is a no-op: both stage
-    tables keep exactly one snapshot and the triples are unchanged."""
-    from ferenda_spark.pipeline import staged_flagship_atomic
+def test_kg_dag_store_matches_storeless(spark, tmpdir):
+    """kg_dag with and without a store commits the same canonical-triple
+    multiset, also after a recrawl removes one page's sameAs sentence:
+    the store rerun reprocesses that page and its stale stage rows never
+    reach canonicalization.  entry() keeps the flagship pivot over the
+    pre-canonical triples of the same DAG."""
+    import importlib.util
+    from ferenda_spark.corpus import load_pages
+    from ferenda_spark.operators.facets import faceted_data
+    from ferenda_spark.pipeline import corpus_triples, kg_dag, parsed_docs
 
-    sf = "/root/testdata/sf0.001"
-    t1, ptab, ttab = staged_flagship_atomic(spark, sf, tmpdir)
-    n = t1.count()
-    assert n > 0
-    assert len(ptab.history()) == 1 and len(ttab.history()) == 1
-    t2, ptab, ttab = staged_flagship_atomic(spark, sf, tmpdir)
-    assert t2.count() == n
-    assert len(ptab.history()) == 1 and len(ttab.history()) == 1
-    # per-row lineage survives: every triple row carries the url +
-    # fingerprint of the page bytes that produced it
-    assert {"url", "input_fingerprint"} <= set(t2.columns)
+    def rows(df):
+        return Counter(tuple(r) for r in df.collect())
+
+    pages = load_pages(spark, SF).localCheckpoint()
+    stored = rows(kg_dag(spark, pages, store=tmpdir).canonical)
+    assert stored == rows(kg_dag(spark, pages).canonical)
+
+    html = F.col("html").cast("string")
+    victim = (pages.where(html.contains("Identical to Document"))
+              .agg(F.min("url")).first()[0])
+    recrawl = pages.withColumn("html", F.when(
+        F.col("url") == victim,
+        F.regexp_replace(html, r" Identical to Document \d+\.", "")
+        .cast("binary")).otherwise(F.col("html"))).localCheckpoint()
+    restored = rows(kg_dag(spark, recrawl, store=tmpdir).canonical)
+    assert restored != stored
+    assert restored == rows(kg_dag(spark, recrawl).canonical)
+
+    # the flagship pivot: faceted_data over parse -> triples
+    spec = importlib.util.spec_from_file_location("entry", os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "__spark_entry__.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    assert rows(mod.entry(spark)) == rows(
+        faceted_data(corpus_triples(spark, parsed_docs(spark, SF))))

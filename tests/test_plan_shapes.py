@@ -244,7 +244,8 @@ BNLJ_ALLOWED = frozenset({
     "stats_tost",             # two 1-row cohort frames
     "stats_srm",              # two 1-row cohort frames
     "stats_chi2_lang_source",  # 1-row grand-total frame
-    "stats_gini_domains",     # 1-row corpus aggregate
+    "stats_gini_domains",     # 1-row Lorenz totals; no join in the
+                              # current plan (window + aggregate)
     "stats_benford",          # 1-row total-count frame
     "stats_ks_lengths",       # 1-row two-sample sizes frame
     "stats_mann_whitney",     # 1-row group-size frame
@@ -269,7 +270,6 @@ BNLJ_ALLOWED = frozenset({
     "dedup_embedding",        # 1-row corpus-centroid frame
     "stats_psi_drift",        # 1-row split totals
     "stats_cohens_kappa",     # 1-row marginal totals
-    "stats_gini_domains",     # 1-row Lorenz totals
     "train_source_temperature",  # 1-row mixture normalizer
     "train_token_budget",     # 1-row budget scalar
     "train_dsir_weights",     # 1-row importance normalizer

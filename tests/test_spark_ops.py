@@ -5,7 +5,6 @@ One module-scoped local[4] session keeps the suite fast; the heavy
 oracle comparison lives in scripts/check_correctness.py (driver gate).
 """
 
-import datetime
 import shutil
 import tempfile
 
@@ -28,72 +27,6 @@ def tmpdir():
     d = tempfile.mkdtemp(prefix="ferenda_spark_test_")
     yield d
     shutil.rmtree(d, ignore_errors=True)
-
-
-def _pages(spark, rows):
-    ts = datetime.datetime(2024, 1, 1)
-    return spark.createDataFrame(
-        [(u, ts, c.encode(), c, "en") for u, c in rows],
-        "url string, warc_ts timestamp, html binary, text string, "
-        "lang string")
-
-
-def test_run_stage_resumes_without_reprocessing(spark, tmpdir):
-    """Kill-and-rerun semantics (X1/I1): second run with identical
-    inputs selects zero pending rows; a changed page reprocesses."""
-    from ferenda_spark.operators.incremental import (
-        fingerprinted, pending_work, read_entries, run_stage)
-
-    calls = []
-
-    def transform(df):
-        out = df.withColumn("out", F.upper("text"))
-        return out.select("url", "input_fingerprint", "out")
-
-    p1 = _pages(spark, [("u1", "aa"), ("u2", "bb")])
-    run_stage(p1, tmpdir, "parse", transform)
-    entries = read_entries(spark, tmpdir)
-    assert entries.count() == 2
-    assert entries.where("success = 'true'").count() == 2
-
-    # identical rerun: nothing pending
-    todo = pending_work(fingerprinted(p1), entries, "parse")
-    assert todo.count() == 0
-
-    # changed content for u2 + new u3: exactly those two pending
-    p2 = _pages(spark, [("u1", "aa"), ("u2", "CHANGED"), ("u3", "cc")])
-    todo2 = pending_work(fingerprinted(p2), entries, "parse")
-    assert sorted(r.url for r in todo2.select("url").collect()) \
-        == ["u2", "u3"]
-
-    # full rerun appends only the pending outputs
-    out2 = run_stage(p2, tmpdir, "parse", transform)
-    assert out2.count() == 4  # u1,u2(old),u2(new),u3
-    entries2 = read_entries(spark, tmpdir)
-    assert entries2.count() == 4
-
-
-def test_run_stage_executes_transform_once(spark, tmpdir):
-    """The entries batch must derive from the materialized output, not
-    re-execute the transform DAG (VERDICT r1 'What's wrong' #2): an
-    accumulator inside the transform counts exactly one pass over the
-    input rows."""
-    from ferenda_spark.operators.incremental import run_stage
-
-    acc = spark.sparkContext.accumulator(0)
-
-    def transform(df):
-        def bump(it):
-            for pdf in it:
-                acc.add(len(pdf))
-                yield pdf[["url", "input_fingerprint", "text"]]
-        return df.mapInPandas(
-            bump, "url string, input_fingerprint string, text string")
-
-    pages = _pages(spark, [("u1", "aa"), ("u2", "bb"), ("u3", "cc")])
-    out = run_stage(pages, tmpdir, "parse", transform)
-    assert out.count() == 3
-    assert acc.value == 3  # would be 6 if the transform ran twice
 
 
 def test_fuzzy_links_banded_recall_vs_exact(spark):
@@ -345,6 +278,59 @@ def test_ispartof_closure_two_levels(spark):
            for r in ispartof_closure(t).collect()}
     assert got == {("d#S1", "d"): 1, ("d#S1.1", "d#S1"): 1,
                    ("d#S1.1", "d"): 2}
+
+
+def _union_find(edges):
+    """vertex -> min vertex of its component, in pure Python."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in list(parent)}
+
+
+def test_connected_components_raises_past_round_cap(spark):
+    """A chain longer than the round cap raises instead of returning
+    split components; graphs that converge under the cap match a
+    pure-Python union-find."""
+    import random
+    from ferenda_spark.operators.canonicalize import connected_components
+
+    def run(edges, **kw):
+        df = spark.createDataFrame(edges, "src long, dst long")
+        return {r.vertex: r.component
+                for r in connected_components(df, **kw).collect()}
+
+    chain = [(i, i + 1) for i in range(12)]
+    with pytest.raises(RuntimeError, match="no fixpoint after 6 rounds"):
+        run(chain, max_iter=6)
+    assert run(chain) == _union_find(chain)
+    rnd = random.Random(7)
+    edges = [(rnd.randrange(40), rnd.randrange(40)) for _ in range(30)]
+    edges = [(a, b) for a, b in edges if a != b]
+    assert run(edges) == _union_find(edges)
+
+
+def test_ispartof_closure_raises_past_round_cap(spark):
+    from ferenda_spark.operators.graphs import ispartof_closure
+    from ferenda_spark import vocab
+
+    def chain(n):
+        return spark.createDataFrame(
+            [("p%d" % i, vocab.DCTERMS_ISPARTOF, "p%d" % (i + 1))
+             for i in range(n)], "subj string, pred string, obj string")
+    with pytest.raises(RuntimeError, match="no fixpoint after 8 rounds"):
+        ispartof_closure(chain(10))
+    got = {(r.uri, r.ancestor_uri): r.depth
+           for r in ispartof_closure(chain(6)).collect()}
+    assert got == {("p%d" % i, "p%d" % j): j - i
+                   for i in range(6) for j in range(i + 1, 7)}
 
 
 def test_pagerank_sums_to_one(spark):
@@ -765,35 +751,30 @@ def test_catalog_nt_dump_format(spark, tmpdir):
 
 def test_resume_full_parse_stage_on_real_corpus(spark, tmpdir):
     """North-rule resumability at pipeline granularity: the REAL parse
-    stage (corpus pages -> extract_pages) through run_stage. A rerun
-    with identical inputs selects zero pending pages; a changed page
+    stage (corpus pages -> extract_pages) through run_stage_atomic. A
+    rerun with identical inputs commits nothing; a changed page
     reprocesses exactly once."""
     from pyspark.sql import functions as F
     from ferenda_spark.corpus import load_pages
     from ferenda_spark.operators.extract import extract_pages
-    from ferenda_spark.operators.incremental import (
-        fingerprinted, pending_work, read_entries, run_stage)
+    from ferenda_spark.operators.incremental import run_stage_atomic
 
     pages = load_pages(spark, "/root/testdata/sf0.001").limit(40) \
         .localCheckpoint()
 
     def transform(todo):
-        parsed = extract_pages(todo)
-        return parsed.join(
-            fingerprinted(todo).select("url", "input_fingerprint"),
-            "url")
+        return extract_pages(todo).join(
+            todo.select("url", "input_fingerprint"), "url")
 
-    out1 = run_stage(pages, tmpdir, "parse", transform)
+    out1, tab, s1 = run_stage_atomic(pages, tmpdir, "parse", transform)
     n = pages.count()
-    assert out1.count() == n
-    entries = read_entries(spark, tmpdir)
-    assert entries.where("success = 'true'").count() == n
+    assert out1.count() == n and s1["summary"]["added_rows"] == n
 
-    # identical rerun: no pending work at all
-    assert pending_work(fingerprinted(pages), entries,
-                        "parse").count() == 0
+    # identical rerun: no pending work, no new snapshot
+    _, _, s2 = run_stage_atomic(pages, tmpdir, "parse", transform)
+    assert s2 is None and len(tab.history()) == 1
 
-    # one page's bytes change -> exactly that page is pending
+    # one page's bytes change -> exactly that page reprocesses
     victim = pages.select("url").first().url
     changed = pages.withColumn(
         "html",
@@ -801,8 +782,10 @@ def test_resume_full_parse_stage_on_real_corpus(spark, tmpdir):
                F.concat(F.col("html"),
                         F.lit(b"<!-- changed -->"))).otherwise(
             F.col("html")))
-    todo = pending_work(fingerprinted(changed), entries, "parse")
-    assert [r.url for r in todo.select("url").collect()] == [victim]
+    _, _, s3 = run_stage_atomic(changed, tmpdir, "parse", transform)
+    assert s3["summary"]["added_rows"] == 1
+    delta = tab.incremental(spark, s1["snapshot_id"], s3["snapshot_id"])
+    assert [r.url for r in delta.select("url").collect()] == [victim]
 
 
 # ------------------------------------------------- training-data assembly
@@ -1087,51 +1070,36 @@ def test_contaminated_13gram_overlap(spark):
     assert got == {1}
 
 
-def test_staged_flagship_resumes_between_stages(spark, tmpdir):
+def test_kg_dag_resumes_between_stages(spark, tmpdir):
     """Multi-stage resumability (north rule): after a 'kill' that
-    finished only the parse stage, the full pipeline rerun selects 0
-    parse rows (entries anti-join) and still produces the triples; a
-    second full run reprocesses nothing in either stage."""
+    finished only the parse stage, kg_dag with the same store reparses
+    nothing and commits only the triples stage; a second full run
+    commits nothing in either stage."""
     from ferenda_spark.corpus import load_pages
-    from ferenda_spark.operators.incremental import (
-        fingerprinted, pending_work, read_entries, run_stage)
     from ferenda_spark.operators.extract import extract_pages
-    from ferenda_spark.pipeline import staged_flagship
+    from ferenda_spark.operators.incremental import run_stage_atomic
+    from ferenda_spark.pipeline import kg_dag
+    from ferenda_spark.snaptable import SnapshotTable
 
-    sf = "/root/testdata/sf0.001"
-    pages = load_pages(spark, sf)
-    n_pages = pages.count()
+    pages = load_pages(spark, "/root/testdata/sf0.001").localCheckpoint()
 
-    # simulate the kill: run ONLY stage 1, then "crash"
-    run_stage(pages, tmpdir, "parse",
-              lambda todo: extract_pages(todo).join(
-                  todo.select("url", "input_fingerprint"), "url"))
-    entries = read_entries(spark, tmpdir)
-    done_parse = entries.where("stage = 'parse' and success = 'true'")
-    n_parsed_ok = done_parse.count()
-    assert n_parsed_ok > 0
-    # the restart's parse work set is EMPTY for every successful doc
-    assert pending_work(fingerprinted(pages), entries, "parse") \
-        .join(done_parse.select("url"), "url", "semi").count() == 0
+    # simulate the kill: run ONLY the parse stage, then "crash"
+    run_stage_atomic(pages, tmpdir, "parse",
+                     lambda todo: extract_pages(todo).join(
+                         todo.select("url", "input_fingerprint"), "url"))
+    ptab = SnapshotTable(tmpdir + "/parse_snap")
+    ttab = SnapshotTable(tmpdir + "/triples_snap")
+    assert len(ptab.history()) == 1 and not ttab.exists()
 
-    triples = staged_flagship(spark, sf, tmpdir)
-    assert triples.count() > 0
-    assert {"subj", "pred", "obj", "url", "input_fingerprint"} \
-        <= set(triples.columns)
-    entries2 = read_entries(spark, tmpdir)
-    # resumed run added NO new parse entries for already-done docs
-    assert entries2.where("stage = 'parse' and success = 'true'") \
-        .select("url").distinct().count() == done_parse.select("url") \
-        .distinct().count()
-    n_triples_entries = entries2.where("stage = 'triples'").count()
+    kg = kg_dag(spark, pages, store=tmpdir)
+    n = kg.canonical.count()
+    assert n > 0
+    assert len(ptab.history()) == 1 and len(ttab.history()) == 1
 
-    # full rerun: both stages select zero pending, entries unchanged
-    staged_flagship(spark, sf, tmpdir)
-    entries3 = read_entries(spark, tmpdir)
-    assert entries3.count() == entries2.count()
-    assert entries3.where("stage = 'triples'").count() \
-        == n_triples_entries
-    assert n_parsed_ok <= n_pages
+    # full rerun: both stages select zero pending, nothing committed
+    kg2 = kg_dag(spark, pages, store=tmpdir)
+    assert len(ptab.history()) == 1 and len(ttab.history()) == 1
+    assert kg2.canonical.count() == n
 
 
 def test_canonical_url_rules(spark):

@@ -42,7 +42,7 @@ def test_streaming_ingest_exactly_once_plus_fingerprint(spark, tmpdir):
     one genuinely new page + one unchanged re-delivery — the stream
     checkpoint has consumed the old FILE, the fingerprint anti-join
     skips the re-delivered CONTENT, so exactly one new row lands."""
-    from ferenda_spark.operators.incremental import read_entries
+    from ferenda_spark.snaptable import SnapshotTable
     from ferenda_spark.streaming import run_streaming_ingest
 
     indir = tmpdir + "/in"
@@ -52,28 +52,28 @@ def test_streaming_ingest_exactly_once_plus_fingerprint(spark, tmpdir):
         return (df.withColumn("out", F.upper("text"))
                 .select("url", "input_fingerprint", "out"))
 
+    tab = SnapshotTable(store + "/parse_snap")
     _write_pages_file(spark, indir, [("u1", "aa"), ("u2", "bb")])
     run_streaming_ingest(spark, indir, store, transform)
-    out = spark.read.parquet(store + "/parse")
-    assert out.count() == 2
-    assert read_entries(spark, store).count() == 2
+    assert tab.read(spark).count() == 2
 
     # new file: u3 is new, u2 re-delivered with identical content
     _write_pages_file(spark, indir, [("u3", "cc"), ("u2", "bb")])
     run_streaming_ingest(spark, indir, store, transform)
-    out2 = spark.read.parquet(store + "/parse")
-    assert sorted(r.url for r in out2.collect()) == ["u1", "u2", "u3"]
-    entries = read_entries(spark, store)
-    assert entries.count() == 3
+    out2 = tab.read(spark)
+    assert sorted((r.url, r.out) for r in out2.collect()) \
+        == [("u1", "AA"), ("u2", "BB"), ("u3", "CC")]
+    assert out2.select("input_fingerprint").distinct().count() == 3
 
     # third run with nothing new: no files to consume, no new rows
     run_streaming_ingest(spark, indir, store, transform)
-    assert spark.read.parquet(store + "/parse").count() == 3
+    assert tab.read(spark).count() == 3
 
 
 def test_streaming_ingest_restart_resumes_from_checkpoint(spark, tmpdir):
     """A fresh query (new awaitTermination lifecycle) against the same
     checkpoint consumes only files that arrived since the last run."""
+    from ferenda_spark.snaptable import SnapshotTable
     from ferenda_spark.streaming import run_streaming_ingest
 
     indir = tmpdir + "/in"
@@ -87,8 +87,8 @@ def test_streaming_ingest_restart_resumes_from_checkpoint(spark, tmpdir):
     _write_pages_file(spark, indir, [("b", "2")])
     _write_pages_file(spark, indir, [("c", "3")])
     run_streaming_ingest(spark, indir, store, transform)
-    got = sorted(r.url
-                 for r in spark.read.parquet(store + "/parse").collect())
+    got = sorted(r.url for r in
+                 SnapshotTable(store + "/parse_snap").read(spark).collect())
     assert got == ["a", "b", "c"]
 
 
@@ -236,7 +236,7 @@ def test_streaming_ingest_atomic_snapshot_per_batch(spark, tmpdir):
     committed outputs, and the table's history hands downstream
     exactly the per-batch delta."""
     from ferenda_spark.snaptable import SnapshotTable
-    from ferenda_spark.streaming import run_streaming_ingest_atomic
+    from ferenda_spark.streaming import run_streaming_ingest
 
     indir = tmpdir + "/in"
     store = tmpdir + "/store"
@@ -246,7 +246,7 @@ def test_streaming_ingest_atomic_snapshot_per_batch(spark, tmpdir):
                 .select("url", "input_fingerprint", "out"))
 
     _write_pages_file(spark, indir, [("u1", "aa"), ("u2", "bb")])
-    run_streaming_ingest_atomic(spark, indir, store, transform)
+    run_streaming_ingest(spark, indir, store, transform)
     tab = SnapshotTable(store + "/parse_snap")
     assert tab.read(spark).count() == 2
     h1 = tab.history()
@@ -254,16 +254,18 @@ def test_streaming_ingest_atomic_snapshot_per_batch(spark, tmpdir):
 
     # u3 new, u2 re-delivered identical -> one-row second snapshot
     _write_pages_file(spark, indir, [("u3", "cc"), ("u2", "bb")])
-    run_streaming_ingest_atomic(spark, indir, store, transform)
+    run_streaming_ingest(spark, indir, store, transform)
     h2 = tab.history()
     assert [h["added_rows"] for h in h2] == [2, 1]
+    assert sorted(r.url for r in tab.read(spark).collect()) \
+        == ["u1", "u2", "u3"]
     delta = tab.incremental(spark, h2[0]["snapshot_id"],
                             h2[1]["snapshot_id"])
     assert [(r.url, r.out) for r in delta.collect()] == [("u3", "CC")]
 
     # nothing new: stream consumes nothing, no empty commit
-    run_streaming_ingest_atomic(spark, indir, store, transform)
-    assert len(tab.history()) == 2
+    run_streaming_ingest(spark, indir, store, transform)
+    assert len(tab.history()) == 2 and tab.read(spark).count() == 3
 
 
 def test_streaming_dedup_ingest_online(spark, tmpdir):

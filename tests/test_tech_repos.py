@@ -97,9 +97,15 @@ def test_mp4_mvhd_v1_and_largesize():
 
 def test_mp4_rejects_non_bmff():
     from ferenda_spark.operators.multimodal import mp4_meta_bytes
+    import struct
     assert mp4_meta_bytes(b"") is None
     assert mp4_meta_bytes(b"RIFF....WAVE....") is None
     assert mp4_meta_bytes(b"\x00" * 64) is None
+    # a payload-less mvhd/tkhd as the last box of a 16-byte moov
+    ftyp = struct.pack(">I4s8s", 16, b"ftyp", b"isom\x00\x00\x00\x00")
+    for typ in (b"mvhd", b"tkhd"):
+        blob = ftyp + struct.pack(">I4sI4s", 16, b"moov", 8, typ)
+        assert mp4_meta_bytes(blob) is None
 
 
 def test_webm_unknown_size_segment_and_f64_duration():
